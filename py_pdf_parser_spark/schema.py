@@ -2,6 +2,7 @@
 
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -38,6 +39,33 @@ EVENTS_SCHEMA = StructType(
         StructField("event_type", StringType()),
         StructField("value", DoubleType()),
         StructField("props", StringType()),
+    ]
+)
+
+# The documents-table shape (TESTDATA.md), not the spans schema.
+DOC_TABLE_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]
+)
+
+# Crawled HTML page drops.
+HTML_PAGES_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("html", StringType()),
+    ]
+)
+
+# Raw crawled PDF drops.
+PDF_BYTES_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("pdf_bytes", BinaryType()),
     ]
 )
 

@@ -1,26 +1,87 @@
-"""Structured Streaming wrapper around the extraction pipeline.
+"""Structured Streaming wrappers around the batch operators.
 
 The reference has no streaming (SURVEY.md §2.10); the batch kernels are
-pure, so the identical extraction runs under ``foreachBatch`` for
-continuous ingestion of newly-landed document files.  Checkpointing is
-Spark's own stream checkpoint (offsets) — per-batch output is appended,
-and the batch kernel's per-document error containment carries over.
+pure, so the identical transformations run over a file-source stream of
+parquet drops.  Every entry point is one ``_read`` plus a transform
+plugged into one of two sinks:
+
+- ``_to_memory``: an in-memory table named ``query_name``, for the
+  stateless gates, the watermarked window and the two
+  ``applyInPandasWithState`` operators;
+- ``_to_files``: the transform runs per micro-batch under
+  ``foreachBatch`` and ``write_batch`` commits it exactly-once, for the
+  extraction paths and the gates that score against frozen artifacts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .schema import DOCUMENTS_SCHEMA
+from .schema import (
+    DOC_TABLE_SCHEMA,
+    DOCUMENTS_SCHEMA,
+    EVENTS_SCHEMA,
+    HTML_PAGES_SCHEMA,
+    PDF_BYTES_SCHEMA,
+)
 
 
-def read_document_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of document parquet drops."""
+def _read(spark: SparkSession, input_dir: str, schema, max_files: int):
+    """File-source stream of parquet drops, ``max_files`` per trigger."""
     return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
+    )
+
+
+def _to_memory(df: DataFrame, query_name: str, mode: str = "append"):
+    """Memory sink: results land in the table ``query_name``."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(mode)
+        .start()
+    )
+
+
+def write_batch(df: DataFrame, batch_id: int, output_dir: str) -> None:
+    """Idempotent micro-batch writer: commit ``df`` as partition
+    ``batch_id=<batch_id>`` of ``output_dir``.
+
+    foreachBatch is at-least-once: a batch retried after a partial
+    write, or replayed from the checkpoint before its commit, runs
+    again, so a blind append would duplicate rows.  Dynamic partition
+    overwrite keyed on batch_id makes the replay of batch N rewrite
+    ONLY partition batch_id=N — byte-identical, since every transform
+    here is deterministic — while a genuinely new batch adds its own
+    partition."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(output_dir)
+    )
+
+
+def _to_files(
+    stream: DataFrame, transform, output_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """File sink: ``transform`` each micro-batch, commit it with
+    ``write_batch``.  The transform sees a whole micro-batch, so
+    per-document aggregates are exact as long as a document arrives
+    whole in one file, never split across batches."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        write_batch(transform(batch_df), batch_id, output_dir)
+
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
     )
 
 
@@ -36,30 +97,18 @@ def stream_windowed_counts(
     ``withWatermark`` prefix: Spark keeps window state only until the
     watermark passes the window end, so state is bounded however long
     the stream runs — the late-data/stateful-agg path of SURVEY.md §2.10.
-    Results land in an in-memory sink table named ``query_name``
-    (complete mode, so the test can compare against the batch run).
+    Complete mode, so the test can compare against the batch run.
     """
     from .events import windowed_counts
-    from .schema import EVENTS_SCHEMA
-
-    from pyspark.sql import functions as F
 
     # Watermarks require TIMESTAMP (ltz); parquet naive timestamps read
     # as NTZ.  Session timezone is pinned UTC, so the cast is exact.
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
+        _read(spark, input_dir, EVENTS_SCHEMA, 4)
         .withColumn("ts", F.col("ts").cast("timestamp_ltz"))
         .withWatermark("ts", watermark)
     )
-    return (
-        windowed_counts(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .start()
-    )
+    return _to_memory(windowed_counts(stream), query_name, "complete")
 
 
 SESSION_OUT_SCHEMA = (
@@ -81,13 +130,11 @@ def stream_sessionize(
     Each micro-batch folds its events into the state and emits a
     snapshot row per touched session; the LAST emission per
     (user, session) equals the batch ``events.sessionize`` result, which
-    the test asserts.  Update-mode memory sink under ``query_name``.
+    the test asserts.  Update-mode memory sink.
     """
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .schema import EVENTS_SCHEMA
 
     gap_s = gap_minutes * 60.0
 
@@ -128,11 +175,8 @@ def stream_sessionize(
             columns=["user_id", "session_id", "n_events", "start_s", "end_s"],
         ).astype({"start_s": "int64", "end_s": "int64"})
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(input_dir)
-    )
+    # Two files per trigger, so state crosses micro-batch boundaries.
+    stream = _read(spark, input_dir, EVENTS_SCHEMA, 2)
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType=SESSION_OUT_SCHEMA,
@@ -140,12 +184,7 @@ def stream_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .start()
-    )
+    return _to_memory(sessions, query_name, "update")
 
 
 DEDUP_OUT_SCHEMA = "doc_id string, digest string"
@@ -167,14 +206,11 @@ def stream_dedup(
     minimal possible for exact streaming dedup; at larger horizons swap
     the flag store for a TTL'd state via GroupStateTimeout).  Within the
     first batch of a digest group, rows sort by doc_id so the survivor
-    is deterministic.  Append-mode memory sink under ``query_name``.
+    is deterministic.  Append-mode memory sink.
     """
     import pandas as pd
 
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .schema import DOCUMENTS_SCHEMA
 
     def keep_first(key, pdfs, state):
         (digest,) = key
@@ -192,9 +228,7 @@ def stream_dedup(
                 pass
 
     stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+        _read(spark, input_dir, DOCUMENTS_SCHEMA, max_files_per_trigger)
         .withColumn(
             "digest",
             # Digest over RAW span fields with explicit separators —
@@ -229,12 +263,7 @@ def stream_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
+    return _to_memory(deduped, query_name)
 
 
 def stream_extract(
@@ -243,58 +272,16 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """readStream -> per-batch extract -> append parquet sink."""
+    """Continuous span extraction: stream of document drops → the
+    batch ``pipeline.extract_spans`` per micro-batch (per-document
+    error containment carries over) → exactly-once file sink."""
     from .pipeline import extract_spans, rebalance
 
-    stream = read_document_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_spans(spark, rebalance(batch_df))
-        out.write.mode("append").parquet(output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_html_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of crawled HTML page parquet drops."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("html", StringType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-
-def write_html_batch(
-    batch_df: DataFrame, batch_id: int, output_dir: str
-) -> None:
-    """Idempotent micro-batch writer for ``stream_html_extract``.
-
-    Dynamic-partition-overwrite keyed on batch_id: a replayed batch N
-    rewrites ONLY partition batch_id=N (byte-identical — the block
-    pipeline is deterministic), never appends a second copy."""
-    from pyspark.sql import functions as F
-
-    from .textops.html import content_spans
-
-    (
-        content_spans(batch_df)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
+    return _to_files(
+        _read(spark, input_dir, DOCUMENTS_SCHEMA, 8),
+        lambda batch: extract_spans(spark, rebalance(batch)),
+        output_dir,
+        checkpoint_dir,
     )
 
 
@@ -304,54 +291,21 @@ def stream_html_extract(
     output_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Continuous HTML main-content extraction: readStream → the exact
-    batch span pipeline (textops.html.content_spans) → append sink.
+    """Continuous HTML main-content extraction: stream of page drops →
+    the exact batch span pipeline (textops.html.content_spans) →
+    exactly-once file sink.
 
     The block pipeline is stateless narrow Column expressions, so it
     runs unchanged under Structured Streaming; the only stateful piece
     (the per-doc row_number for span ``seq``) is computed per
-    micro-batch under ``foreachBatch`` — correct because a page arrives
-    whole in one file, never split across batches.
+    micro-batch — correct because a page arrives whole in one file."""
+    from .textops.html import content_spans
 
-    Exactly-once: foreachBatch is at-least-once (a batch retried after
-    a partial write, or replayed from the checkpoint before its commit,
-    runs again), so a blind append would duplicate span rows.  The
-    write is made idempotent by partitioning the output on ``batch_id``
-    and using dynamic partition overwrite — a replay of batch N
-    rewrites ONLY partition batch_id=N, byte-identical, instead of
-    appending a second copy."""
-    stream = read_html_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_html_batch(batch_df, batch_id, output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_pdf_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of (doc_id, pdf_bytes) parquet drops — raw
-    crawled PDFs as they land."""
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("pdf_bytes", BinaryType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
+    return _to_files(
+        _read(spark, input_dir, HTML_PAGES_SCHEMA, 8),
+        content_spans,
+        output_dir,
+        checkpoint_dir,
     )
 
 
@@ -363,38 +317,19 @@ def stream_pdf_extract(
     config=None,
     include_media: bool = False,
 ) -> StreamingQuery:
-    """Continuous REAL-PDF ingestion: readStream of raw PDF bytes → the
+    """Continuous REAL-PDF ingestion: stream of raw PDF bytes → the
     exact batch byte-path extraction (sources.pdf_bytes.
     extract_spans_from_pdf, minipdf parse + per-family recipes, corrupt
-    documents isolated as error rows) → idempotent sink.
-
-    Same exactly-once discipline as stream_html_extract: foreachBatch
-    is at-least-once, so the write partitions on ``batch_id`` with
-    dynamic partition overwrite — a replayed batch rewrites only its
-    own partition (the parse is deterministic), never appends a
-    duplicate."""
-    from pyspark.sql import functions as F
-
+    documents isolated as error rows) → exactly-once file sink."""
     from .sources.pdf_bytes import extract_spans_from_pdf
 
-    stream = read_pdf_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            extract_spans_from_pdf(
-                batch_df, config=config, include_media=include_media
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_dir)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _to_files(
+        _read(spark, input_dir, PDF_BYTES_SCHEMA, 8),
+        lambda batch: extract_spans_from_pdf(
+            batch, config=config, include_media=include_media
+        ),
+        output_dir,
+        checkpoint_dir,
     )
 
 
@@ -410,26 +345,11 @@ def stream_pii_scrub(
     downstream, which is where a privacy gate belongs in a pipeline.
     Stateless narrow transformation: identical results to the batch
     operator on the same rows (asserted by test), no watermark or state
-    store.  Append-mode memory sink under ``query_name``."""
+    store.  Append-mode memory sink."""
     from .textops.analysis import pii_scrub
 
-    # the documents-table shape (TESTDATA.md), not the spans schema
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        pii_scrub(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
+    stream = _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger)
+    return _to_memory(pii_scrub(stream), query_name)
 
 
 def stream_blocklist_gate(
@@ -448,24 +368,12 @@ def stream_blocklist_gate(
     store, no watermark — so results are identical to the batch
     operator on the same rows (asserted by test) and replayed files
     decide identically across stream restarts.  Append-mode memory
-    sink under ``query_name``."""
+    sink."""
     from .textops.analysis import blocklist_filter
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        blocklist_filter(stream, words, max_frac=max_frac)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
+    stream = _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger)
+    return _to_memory(
+        blocklist_filter(stream, words, max_frac=max_frac), query_name
     )
 
 
@@ -485,53 +393,12 @@ def stream_mixture_sample(
     identical to the batch operator on the same rows (asserted by
     test), and because the md5 buckets are fixed, REPLAYED files decide
     identically — the sample stays consistent across stream restarts.
-    Append-mode memory sink under ``query_name``."""
+    Append-mode memory sink."""
     from .textops.analysis import mixture_sample
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        mixture_sample(stream, rates, default_pct=default_pct)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_quality_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    lm: DataFrame,
-    thresholds: DataFrame,
-    output_dir: str,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_quality_gate``:
-    score the batch under the FIXED pre-trained LM, label against the
-    FIXED thresholds, dynamic-partition-overwrite on batch_id (a
-    replayed batch rewrites only its own partition — the scoring is
-    deterministic, so byte-identical)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import bucket_by_thresholds, lm_perplexity
-
-    scores = lm_perplexity(batch_df.select("doc_id", "text"), lm=lm).join(
-        batch_df.select("doc_id", "lang"), "doc_id"
-    )
-    (
-        bucket_by_thresholds(scores, thresholds)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
+    stream = _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger)
+    return _to_memory(
+        mixture_sample(stream, rates, default_pct=default_pct), query_name
     )
 
 
@@ -553,30 +420,23 @@ def stream_quality_gate(
     (``analysis.unigram_lm`` + ``analysis.perplexity_thresholds``) and
     every ingest batch is scored against them.
 
-    Both artifacts are static broadcast tables, and the per-doc score
-    aggregate runs per micro-batch under ``foreachBatch`` (a document
-    arrives whole in one file, never split across batches), so results
-    are identical to the batch operator with the same ``lm`` +
-    ``thresholds`` on the same rows (asserted by test).  Exactly-once
-    via batch_id dynamic partition overwrite, same as the other
-    foreachBatch sinks here."""
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    Both artifacts are static broadcast tables and the per-doc score
+    aggregate runs per micro-batch, so results are identical to the
+    batch operator with the same ``lm`` + ``thresholds`` on the same
+    rows (asserted by test).  Exactly-once file sink."""
+    from .textops.analysis import bucket_by_thresholds, lm_perplexity
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_quality_batch(batch_df, batch_id, lm, thresholds, output_dir)
+    def gate(batch: DataFrame) -> DataFrame:
+        scores = lm_perplexity(batch.select("doc_id", "text"), lm=lm).join(
+            batch.select("doc_id", "lang"), "doc_id"
+        )
+        return bucket_by_thresholds(scores, thresholds)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _to_files(
+        _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger),
+        gate,
+        output_dir,
+        checkpoint_dir,
     )
 
 
@@ -593,51 +453,12 @@ def stream_gopher_gate(
     the plan as literals — no state store, no watermark — so results
     are identical to the batch operator on the same rows (asserted by
     test) and replayed files decide identically across restarts.
-    Append-mode memory sink under ``query_name``; ``rule_bounds``
-    forwards min_words/max_words/etc to gopher_rules."""
+    Append-mode memory sink; ``rule_bounds`` forwards
+    min_words/max_words/etc to gopher_rules."""
     from .textops.analysis import gopher_rules
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        gopher_rules(stream, **rule_bounds)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_dsir_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    model: DataFrame,
-    output_dir: str,
-    n_buckets: int,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_dsir_gate``: score
-    the batch against the FIXED model, dynamic-partition-overwrite on
-    batch_id (scoring is deterministic integer arithmetic, so a
-    replayed batch rewrites its partition byte-identically)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import dsir_score
-
-    (
-        dsir_score(batch_df.select("doc_id", "text"), model, n_buckets)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
-    )
+    stream = _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger)
+    return _to_memory(gopher_rules(stream, **rule_bounds), query_name)
 
 
 def stream_dsir_gate(
@@ -660,32 +481,17 @@ def stream_dsir_gate(
     The model covers the whole finite feature space, so documents
     with tokens the training corpus never saw still score, and the
     gate never retrains mid-stream (the statistically correct
-    shape).  The per-doc aggregate runs per micro-batch under
-    ``foreachBatch`` (a document arrives whole in one file, never
-    split across batches — the same contract as
-    ``stream_quality_gate``), so results equal the batch
-    ``dsir_score`` with the same model on the same rows (asserted by
-    test).  Exactly-once via batch_id dynamic partition overwrite."""
-    from .textops.analysis import DSIR_BUCKETS
+    shape).  The per-doc aggregate runs per micro-batch, so results
+    equal the batch ``dsir_score`` with the same model on the same
+    rows (asserted by test).  Exactly-once file sink."""
+    from .textops.analysis import DSIR_BUCKETS, dsir_score
 
     nb = n_buckets or DSIR_BUCKETS
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_dsir_batch(batch_df, batch_id, model, output_dir, nb)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _to_files(
+        _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger),
+        lambda batch: dsir_score(batch.select("doc_id", "text"), model, nb),
+        output_dir,
+        checkpoint_dir,
     )
 
 
@@ -704,53 +510,18 @@ def stream_pq_encode(
     stream pays only the one-projection encode path (no shuffle, no
     state).  Stateless narrow transformation: identical codes to the
     batch ``pq_assign`` with the same codebook on the same rows
-    (asserted by test).  Append-mode memory sink under
-    ``query_name``."""
+    (asserted by test).  Append-mode memory sink."""
     from .textops.similarity import pq_assign
 
     emb_schema = "vec_id long, embedding array<float>, label int"
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        pq_assign(stream, codebook)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_bm25_batch(
-    batch_df: "DataFrame",
-    batch_id: int,
-    model: "DataFrame",
-    output_dir: str,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_bm25_gate``: score
-    the batch against the FIXED model, dynamic-partition-overwrite on
-    batch_id (scoring is deterministic integer arithmetic, so a
-    replayed batch rewrites its partition byte-identically)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import bm25_score
-
-    (
-        bm25_score(batch_df.select("doc_id", "text"), model)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
-    )
+    stream = _read(spark, input_dir, emb_schema, max_files_per_trigger)
+    return _to_memory(pq_assign(stream, codebook), query_name)
 
 
 def stream_bm25_gate(
     spark: SparkSession,
     input_dir: str,
-    model: "DataFrame",
+    model: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
@@ -762,27 +533,14 @@ def stream_bm25_gate(
     micro-batch pays only explode -> broadcast join -> exact integer
     per-(doc, query) sum.  df/idf/avgdl are frozen, so arriving
     documents never shift the ranking function and a replayed file
-    scores identically.  The per-doc aggregate runs per micro-batch
-    under ``foreachBatch`` (a document arrives whole in one file —
-    the same contract as ``stream_quality_gate``), so results equal
-    the batch ``bm25_score`` with the same model on the same rows
-    (asserted by test).  Exactly-once via batch_id dynamic partition
-    overwrite."""
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    scores identically.  The per-doc aggregate runs per micro-batch,
+    so results equal the batch ``bm25_score`` with the same model on
+    the same rows (asserted by test).  Exactly-once file sink."""
+    from .textops.analysis import bm25_score
 
-    def process_batch(batch_df: "DataFrame", batch_id: int) -> None:
-        write_bm25_batch(batch_df, batch_id, model, output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _to_files(
+        _read(spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger),
+        lambda batch: bm25_score(batch.select("doc_id", "text"), model),
+        output_dir,
+        checkpoint_dir,
     )

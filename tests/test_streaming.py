@@ -40,6 +40,45 @@ def test_stream_extract_processes_files(spark, tmp_path):
     assert out.where("status = 'ok'").count() == n_docs
 
 
+def test_stream_extract_replay_is_idempotent(spark, tmp_path):
+    """A micro-batch replayed from the checkpoint (its commit file lost)
+    must not duplicate documents: the sink overwrites its batch_id
+    partition instead of appending a second copy."""
+    import os
+    import shutil
+
+    src = ensure_mixed_corpus(0.001)
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    for name in os.listdir(src):
+        if name.endswith(".parquet"):
+            shutil.copy(os.path.join(src, name), os.path.join(in_dir, name))
+
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run_to_end():
+        query = stream_extract(spark, in_dir, out_dir, ckpt)
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+
+    run_to_end()
+    # lose the last commit: the restarted query replays that batch
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run_to_end()
+
+    out = spark.read.parquet(out_dir)
+    n_docs = spark.read.parquet(src).count()
+    assert out.count() == out.select("doc_id").distinct().count() == n_docs
+
+
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):
     """Watermarked streaming window agg == batch windowed_counts."""
     import shutil
@@ -240,21 +279,22 @@ def test_stream_html_extract_matches_batch(spark, tmp_path):
 def test_stream_html_extract_replay_is_idempotent(spark, tmp_path):
     """A replayed micro-batch (foreachBatch is at-least-once) must not
     duplicate span rows: the writer overwrites its batch_id partition."""
-    from py_pdf_parser_spark.streaming import write_html_batch
+    from py_pdf_parser_spark.streaming import write_batch
     from py_pdf_parser_spark.synth import ensure_html_corpus
+    from py_pdf_parser_spark.textops.html import content_spans
 
     src = ensure_html_corpus(0.001)
     batch = spark.read.parquet(src)
     out_dir = str(tmp_path / "html_replay_out")
 
-    write_html_batch(batch, 0, out_dir)
+    write_batch(content_spans(batch), 0, out_dir)
     first = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
     # simulate a checkpoint replay: same batch_id, same input, again
-    write_html_batch(batch, 0, out_dir)
+    write_batch(content_spans(batch), 0, out_dir)
     second = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
     assert first == second
     # while a genuinely NEW batch appends its own partition
-    write_html_batch(batch.limit(1), 1, out_dir)
+    write_batch(content_spans(batch.limit(1)), 1, out_dir)
     n_new = (
         spark.read.parquet(out_dir).where("batch_id = 1").count()
     )
