@@ -352,8 +352,7 @@ def materialize_elements(
 
 
 def tune_scan_splits(
-    spark: SparkSession, input_path: str, tasks_per_core: int = 4,
-    replicate: int = 1,
+    spark: SparkSession, input_path: str, tasks_per_core: int = 4
 ) -> None:
     """Size parquet scan splits so the job gets ~tasks_per_core tasks/core.
 
@@ -373,7 +372,6 @@ def tune_scan_splits(
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
-    total *= max(replicate, 1)
     cores = spark.sparkContext.defaultParallelism
     split = max(1 << 20, min(128 << 20, total // max(cores * tasks_per_core, 1)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))

@@ -39,13 +39,20 @@ def iceberg_configs(
     }
 
 
+def _half_ram() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 >> 20}m"
+
+
 def get_spark(
     cores: Optional[int] = None,
     app_name: str = "spark-pdf-extract",
     shuffle_partitions: Optional[int] = None,
     iceberg_warehouse: Optional[str] = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -85,10 +92,15 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         # Single-JVM local mode hosts all executor threads: GC pressure
         # at high core counts needs a big heap (measured: 8g heap cost
-        # 1.5x at local[32]).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # 1.5x at local[32]), so the default is half the host's RAM.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _half_ram()),
+        )
     )
     if iceberg_warehouse:
         for k, v in iceberg_configs(iceberg_warehouse).items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -1,167 +1,53 @@
-"""Unit tests for bench.py's scaling gate statistics.
+"""Unit tests for bench.py's stdout contract.
 
-The 0.8-rule statistics were flagged twice by round advice (r4:
-adaptive stopping on the gate statistic; r4: clamping a corrupted
-superlinear pair into the best-of headline) and the engine
-decomposition was re-designed in r5 (per-round paired control).  These
-tests pin the statistical contract with injected measurement functions
-— no Spark, no subprocesses, sub-second.
+Callers may keep only a bounded stdout tail, so the bench's last stdout
+line must be a slim (<1 KB) JSON headline, with the full record in a
+file.
+No Spark, sub-second.
 """
+
+import json
 
 import bench
 
-
-def _mk_run_fn(small_secs, big_secs, docs=1000):
-    """run_fn returning pre-scripted per-round (small, big) times.
-
-    The small level is called first within each round (bench pairs the
-    levels back-to-back), so interleave by call order.
-    """
-    calls = {"small": 0, "big": 0}
-
-    def run_fn(n_exec):
-        if n_exec == 1:
-            sec = small_secs[calls["small"]]
-            calls["small"] += 1
-        else:
-            sec = big_secs[calls["big"]]
-            calls["big"] += 1
-        return {"docs": docs, "sec": sec}
-
-    return run_fn
-
-
-def _eff(sec_small, sec_big, ratio=4):
-    return (1.0 / sec_big) / (ratio * (1.0 / sec_small))
-
-
-def test_gate_is_median_not_max():
-    # Per-round efficiencies: small fixed at 40 s, big at
-    # [12.5, 16.7, 14.3] s -> efficiencies [0.8, ~0.6, ~0.7].
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=3,
-        run_fn=_mk_run_fn([40.0, 40.0, 40.0], [12.5, 16.7, 14.3]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert max(effs) == 0.8
-    # headline == median, NOT the max round
-    assert s["efficiency"] == sorted(effs)[1] == s["efficiency_median"]
-    assert s["efficiency"] < 0.8
-
-
-def test_round_count_is_fixed():
-    calls = []
-
-    def run_fn(n_exec):
-        calls.append(n_exec)
-        return {"docs": 1000, "sec": 10.0 if n_exec == 1 else 3.125}
-
-    bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=5, run_fn=run_fn
-    )
-    # Exactly rounds x 2 measurements even though round 1 already
-    # cleared 0.8 (no adaptive extension, no early stop).
-    assert calls == [1, 4] * 5
-
-
-def test_superlinear_pair_excluded_from_best_pair():
-    # Round 1 is corrupted (VM steal on the small arm -> raw 1.28);
-    # round 2 is clean at 0.75, round 3 clean at 0.70.
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=3,
-        run_fn=_mk_run_fn([64.0, 40.0, 40.0], [12.5, 13.33, 14.29]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert effs[0] > 1.0
-    # best clean pair, never the corrupted one
-    assert s["efficiency_best_pair"] == max(e for e in effs if e <= 1.0)
-    # and the headline median is capped at 1.0 on the record
-    assert s["efficiency"] <= 1.0
-
-
-def test_all_pairs_corrupted_falls_back_to_least_inflated():
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=2,
-        run_fn=_mk_run_fn([80.0, 88.0], [12.5, 12.5]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert all(e > 1.0 for e in effs)
-    assert s["efficiency_best_pair"] == min(effs)
-
-
-def test_control_pairs_inside_each_round():
-    kernel_calls = []
-
-    def kernel_fn(n_procs):
-        kernel_calls.append(n_procs)
-        # hardware ceiling: 32 procs only 2x the 8-proc rate -> 0.5
-        return {8: 100.0, 32: 200.0}[n_procs]
-
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=3, control=True,
-        run_fn=_mk_run_fn([40.0] * 3, [20.0, 25.0, 22.2]),
-        kernel_fn=kernel_fn,
-    )
-    # one (8, 32) control pair per round, interleaved with the rounds
-    assert kernel_calls == [8, 32] * 3
-    for r in s["rounds"]:
-        assert r["ctl_efficiency"] == 0.5
-        # per-round decomposition against the SAME round's control
-        assert r["engine_efficiency"] == min(
-            1.0, round(r["efficiency"] / 0.5, 3)
-        )
-    # headline decomposition = median of per-round decompositions
-    per_round = sorted(r["engine_efficiency"] for r in s["rounds"])
-    assert s["engine_efficiency"] == per_round[1]
-    assert s["ctl_efficiency_median"] == 0.5
-
-
-def test_control_clamped_at_one():
-    # A noisy-fast control (raw 1.2) must clamp to 1.0 so it cannot
-    # deflate the engine number; engine also clamps at 1.0.
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=1, control=True,
-        run_fn=_mk_run_fn([40.0], [10.5]),
-        kernel_fn=lambda n: {8: 100.0, 32: 480.0}[n],
-    )
-    r = s["rounds"][0]
-    assert r["ctl_efficiency"] == 1.0
-    assert r["engine_efficiency"] == min(1.0, r["efficiency"])
+RESULT = {
+    "metric": "flagship extraction wall time (mixed corpus, local[4])",
+    "value": 2.127,
+    "unit": "sec",
+    "sf": 0.1,
+    "docs": 20000,
+    "docs_per_sec": 9402.9,
+    "pdf_path": {"docs": 6000, "sec": 4.8, "docs_per_sec": 1250.0},
+    "lsh_audit": {"minhash_perms": 32, "bands": 16, "rows_per_band": 2,
+                  "oversized_buckets": 0, "capped_pairs_dropped": 0,
+                  "cc_rounds": 5},
+    "queries": {f"q{i}": 0.5 for i in range(65)},  # must drop
+    "query_build_secs": {f"q{i}": 0.3 for i in range(65)},  # must drop
+}
 
 
 def test_slim_headline_under_capture_window():
-    import json
-
-    fullbox = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=5, control=True,
-        run_fn=_mk_run_fn([40.0] * 5, [12.5, 16.7, 14.3, 15.0, 13.0]),
-        kernel_fn=lambda n: {8: 100.0, 32: 360.0}[n],
-    )
-    headline = bench._slim_headline(
-        {
-            "metric": "flagship extraction wall time (mixed corpus, "
-            "local[32])",
-            "value": 0.722,
-            "unit": "sec",
-            "sf": 0.1,
-            "docs": 20000,
-            "docs_per_sec": 27700.8,
-            "pdf_path": {"docs": 6000, "sec": 0.997,
-                         "docs_per_sec": 6018.1},
-            "lsh_audit": {"minhash_perms": 32, "bands": 16,
-                          "rows_per_band": 2, "oversized_buckets": 0,
-                          "capped_pairs_dropped": 0, "cc_rounds": 5},
-            "scaling": fullbox,
-            "scaling_fullbox": fullbox,
-            "kernel_control": {"efficiency_8_to_32": 0.9},
-            "skew": {"flat_sec": 1.84, "skew_sec": 5.32,
-                     "skew_rebal_sec": 4.30},
-            "queries": {f"q{i}": 0.5 for i in range(50)},  # must drop
-        }
-    )
+    headline = bench._slim_headline(RESULT)
     line = json.dumps(headline, separators=(",", ":"))
     assert len(line.encode()) < 1024
     assert "queries" not in headline
-    for k in ("engine_efficiency", "ctl_efficiency_median"):
-        assert k in headline["scaling_fullbox"]
-    assert "rounds" not in headline["scaling_fullbox"]
+
+
+def test_emit_result_quick_writes_record_and_ends_stdout(
+    tmp_path, monkeypatch, capsys
+):
+    monkeypatch.chdir(tmp_path)
+    full = {**RESULT, "query_passes": {f"q{i}": [0.5] for i in range(65)}}
+    print("earlier output")
+    bench._emit_result(RESULT, full=full, quick=True)
+
+    with open(tmp_path / "BENCH" / "RESULT_quick.json") as f:
+        assert json.load(f) == full
+    assert not (tmp_path / "BENCH" / "RESULT.json").exists()
+    last = capsys.readouterr().out.splitlines()[-1]
+    assert len(last.encode()) < 1024
+    headline = json.loads(last)
+    for k in ("value", "docs_per_sec", "pdf_path", "lsh_audit"):
+        assert headline[k] == RESULT[k]
+    assert headline["detail"] == "BENCH/RESULT_quick.json"
+    assert "queries" not in headline
